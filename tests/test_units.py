@@ -317,12 +317,13 @@ def test_word_ngrams_short_docs(spark):
 
 
 def test_cluster_canonical_groups_transitive_chain(spark):
-    """dedup_cluster_canonical: a transitive near-dup chain A~B, B~C
-    (A and C NOT direct pairs) must collapse to one canonical id within
-    the 3 fixed label rounds."""
+    """graph.min_label_rounds, the dedup clustering primitive: a
+    transitive near-dup chain A~B, B~C (A and C NOT direct pairs) must
+    collapse to one canonical id within the 3 fixed label rounds."""
     from pyspark.sql import functions as F
 
     from tropology_spark.operators.dedup import jaccard_pairs
+    from tropology_spark.operators.graph import min_label_rounds
 
     base = " ".join(f"tok{i}" for i in range(40))
     chain = {
@@ -339,25 +340,43 @@ def test_cluster_canonical_groups_transitive_chain(spark):
     assert (10, 11) in got_pairs and (11, 12) in got_pairs
     assert (10, 12) not in got_pairs  # 38/42 = 0.905 < 0.95: chain, not clique
 
-    # Min-label propagation over the pair graph (the operator's core,
-    # inlined on the tiny fixture): 3 rounds must reach label 10 for
-    # the whole chain.
-    ids = docs.select("doc_id")
-    p = pairs.select("doc_a", "doc_b")
-    es = (
-        p.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-        .unionByName(p.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-        .unionByName(ids.select(F.col("doc_id").alias("s"), F.col("doc_id").alias("d")))
-    )
-    labels = ids.select("doc_id", F.col("doc_id").alias("lbl"))
-    for _ in range(3):
-        labels = (
-            es.join(labels, es.s == labels.doc_id)
-            .groupBy(F.col("d").alias("doc_id"))
-            .agg(F.min("lbl").alias("lbl"))
+    # The operators' propagation primitive over the pair graph: 3
+    # rounds must reach label 10 for the whole chain.
+    def rounds3(pairs, ids):
+        und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
+            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
-    got = {r["doc_id"]: r["lbl"] for r in labels.collect()}
-    assert got == {10: 10, 11: 10, 12: 10, 99: 99}
+        labels = ids.select("doc_id", F.col("doc_id").alias("lbl"))
+        return {r["doc_id"]: r["lbl"] for r in min_label_rounds(und, labels, 3).collect()}
+
+    assert rounds3(pairs, docs) == {10: 10, 11: 10, 12: 10, 99: 99}
+
+    # Bounded rounds are a refinement, not components: on the path
+    # 1-2-3-4-5 node 5 is 4 hops from 1, so after 3 rounds it carries
+    # 2; the isolated node 6 keeps its own label.
+    path = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (4, 5)], "doc_a long, doc_b long")
+    ids = spark.createDataFrame([(i,) for i in range(1, 7)], "doc_id long")
+    assert rounds3(path, ids) == {1: 1, 2: 1, 3: 1, 4: 1, 5: 2, 6: 6}
+
+
+def test_min_label_rounds_materializes_once(spark, monkeypatch):
+    """The fused rounds read the label vector once each, so the whole
+    loop is checkpointed once at the end — never per round."""
+    from tropology_spark.operators import graph
+
+    calls = []
+    real = graph.iter_materialize
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(graph, "iter_materialize", counting)
+    und = spark.createDataFrame([(1, 2), (2, 1), (2, 3), (3, 2)], "u long, v long")
+    labels = spark.createDataFrame([(i, i) for i in (1, 2, 3)], "doc_id long, lbl long")
+    got = graph.min_label_rounds(und, labels, rounds=3)
+    assert len(calls) == 1
+    assert sorted(map(tuple, got.collect())) == [(1, 1), (2, 1), (3, 1)]
 
 
 def test_txlog_append_overwrite_timetravel(spark, tmp_path):

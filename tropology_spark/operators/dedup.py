@@ -1260,9 +1260,10 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # M261 dedup_cluster3 — 3-round min-label clusters over the LSH candidate
-# graph.  minlabel_rounds / _minlabel_steps_sql are the SINGLE HOME of the
-# propagation arithmetic — mm_phash_clusters (M266, multimodal.py) imports
-# them; the two ops differ only in the candidate graph.
+# graph.  graph.min_label_rounds is the SINGLE HOME of the Spark-side
+# propagation arithmetic (shared with mm_phash_clusters, M266, and the M24
+# canonical labels); _minlabel_steps_sql below stays the independent SQL
+# oracle of both dedup_cluster3 and mm_phash_clusters.
 # ---------------------------------------------------------------------------
 
 
@@ -1284,34 +1285,6 @@ def _minlabel_steps_sql(rounds: int = 3) -> str:
     return ",".join(
         _MINLABEL_STEP_SQL.format(n=n, p=n - 1) for n in range(1, rounds + 1)
     )
-
-
-def minlabel_rounds(lab: DataFrame, und: DataFrame, rounds: int = 3) -> DataFrame:
-    """``rounds`` synchronous min-label propagation steps over an
-    undirected edge list ``und(u, v)`` starting from ``lab(doc_id,
-    lbl)`` — the Spark twin of :func:`_minlabel_steps_sql` and the
-    single home of the propagation arithmetic (dedup_cluster3 and
-    mm_phash_clusters differ only in the candidate graph).  Each
-    round's label vector is checkpointed (the DOUBLE-REFERENCE rule:
-    round k feeds round k+1 as both the self and the neighbor
-    side)."""
-    from tropology_spark.session import iter_materialize
-
-    for _ in range(rounds):
-        nb = lab.select(F.col("doc_id").alias("v"), F.col("lbl").alias("nlbl"))
-        lab = iter_materialize(
-            lab.join(und, lab.doc_id == und.u, "left")
-            .join(nb, "v", "left")
-            .groupBy("doc_id", "lbl")
-            .agg(F.min("nlbl").alias("mnl"))
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("mnl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-        )
-    return lab
 
 
 def _cluster3_oracle() -> str:
@@ -1355,29 +1328,31 @@ def dedup_cluster3(
     Composed, not copied: the oracle extends _minhash_bands_cte (the
     J3/M211 single home) and the Spark side reads the session-shared
     minhash_bands_materialized through minhash_candidate_pairs.
-    Scale: each round is one shuffle on the doc key; the label vector
-    is checkpointed per round (the DOUBLE-REFERENCE rule: round k
-    feeds round k+1 as both the self and the neighbor side).
+    Scale: the rounds are graph.min_label_rounds — one join + one
+    min-aggregation on the doc key per round, one checkpoint at the
+    end.
 
     ``docs=`` substitutes the document frame — (doc_id, text) — for
     the weak-scaling probe (tools/scale_probes/cluster3_scale.py, via
     minhash_bands_frame); the driver contract never passes it."""
+    from tropology_spark.operators.graph import min_label_rounds
     from tropology_spark.session import iter_materialize
 
+    # Materialized: all three rounds read the pair list.
     pairs = (
-        minhash_candidate_pairs(minhash_bands_frame(spark, sf_dir, docs=docs))
+        iter_materialize(
+            minhash_candidate_pairs(minhash_bands_frame(spark, sf_dir, docs=docs))
+        )
         if docs is not None
         else minhash_pairs_materialized(spark, sf_dir)
     )
-    und = iter_materialize(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        )
-    )  # referenced by all three rounds
+    und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionAll(
+        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    )
     lab = (
         docs if docs is not None else load(spark, sf_dir, "documents")
     ).select("doc_id", F.col("doc_id").alias("lbl"))
-    lab = minlabel_rounds(lab, und, 3)
+    lab = min_label_rounds(und, lab, 3)
     return lab.select("doc_id", F.col("lbl").cast("bigint").alias("label3"))
 
 

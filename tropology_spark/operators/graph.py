@@ -583,6 +583,33 @@ def pagerank(
     return ranks
 
 
+def min_label_rounds(edges: DataFrame, labels: DataFrame, rounds: int) -> DataFrame:
+    """``rounds`` synchronous min-label steps — the one Spark home of the
+    bounded-round dedup clustering (dedup_cluster3, mm_phash_clusters,
+    the M24 canonical labels); the independent SQL oracles are
+    ``dedup._MINLABEL_STEP_SQL`` and ``pipeline_ops._LABEL_ITER``.
+
+    ``edges(u, v)`` holds both directions; ``labels`` is ``(doc_id,
+    lbl)``.  With self-loops added, one round is one join and one min:
+    ``lbl'(v) = min(lbl(u) : (u, v) ∈ edges ∪ (doc_id, doc_id))``.  A
+    round reads the previous vector once (no DOUBLE-REFERENCE), so the
+    fused plan is materialized once, at the end.
+
+    Precondition: every endpoint of ``edges`` is a ``doc_id`` in
+    ``labels``; otherwise the output gains rows for unknown nodes.
+    Fixpoint components are :func:`connected_components`."""
+    es = edges.select("u", "v").unionByName(
+        labels.select(F.col("doc_id").alias("u"), F.col("doc_id").alias("v"))
+    )
+    for _ in range(rounds):
+        labels = (
+            es.join(labels, es.u == labels.doc_id)
+            .groupBy(F.col("v").alias("doc_id"))
+            .agg(F.min("lbl").alias("lbl"))
+        )
+    return iter_materialize(labels)
+
+
 def connected_components(
     bi_edges: DataFrame,
     max_iter: int = 10,

@@ -1162,18 +1162,20 @@ def mm_phash_clusters(spark, sf_dir: str) -> DataFrame:
 
     Composed, not copied: the candidate graph is the registered
     mm_phash_hamming pipeline (oracle composed verbatim); the
-    propagation is minlabel_rounds / _minlabel_steps_sql — the SAME
-    single-home arithmetic dedup_cluster3 (M261) uses, differing only
-    in the input graph.  Scale: the pair graph is banded (never
-    all-pairs; band width grows with log2(n) at corpus scale — the
-    M99 note); each round is one shuffle on the asset key; the label
-    vector is checkpointed per round (DOUBLE-REFERENCE rule), and the
-    size rollup is one map-side-combinable groupBy.  Unlike the LSH
-    near-clique components, pHash band chains can exceed diameter 3 —
-    partial labels after the bounded unroll are the documented
-    stepping-stone semantics (full convergence = the registered M8
-    operator), and the twin pins exact 3-hop-ball convergence."""
-    from tropology_spark.operators.dedup import minlabel_rounds
+    propagation is graph.min_label_rounds — the SAME single-home
+    arithmetic dedup_cluster3 (M261) uses, differing only in the input
+    graph — and the oracle is dedup._minlabel_steps_sql, the SQL twin
+    both ops are checked against.  Scale: the pair graph is banded
+    (never all-pairs; band width grows with log2(n) at corpus scale —
+    the M99 note); each round is one join + min-aggregation on the
+    asset key, the label vector is checkpointed once after the last
+    round, and the size rollup is one map-side-combinable groupBy.
+    Unlike the LSH near-clique components, pHash band chains can
+    exceed diameter 3 — partial labels after the bounded unroll are
+    the documented stepping-stone semantics (full convergence = the
+    registered M8 operator), and the twin pins exact 3-hop-ball
+    convergence."""
+    from tropology_spark.operators.graph import min_label_rounds
     from tropology_spark.registry import QUERIES
     from tropology_spark.session import iter_materialize
     from tropology_spark.sources.tables import load
@@ -1187,7 +1189,7 @@ def mm_phash_clusters(spark, sf_dir: str) -> DataFrame:
     lab = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("doc_id").alias("lbl")
     )
-    lab = minlabel_rounds(lab, und, 3)
+    lab = min_label_rounds(und, lab, 3)
     siz = lab.groupBy("lbl").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     return lab.join(siz, "lbl").select(
         "doc_id",

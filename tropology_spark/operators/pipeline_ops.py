@@ -153,33 +153,26 @@ SESSION_CACHES.append(_CANON_LBL_CACHE)
 def canonical_labels_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The M24 3-round min-label propagation result — the per-doc
     ``(doc_id, lbl)`` frame — materialized once per (session, sf_dir).
-    Shared by the registered M24 query and (through ``QUERIES``) the
-    M53 curation composition; round-19 A/B at sf0.1: the composition
-    used to re-run the whole pair join + 3 propagation rounds
-    (~0.8 s warm) per reference."""
+    Shared by the registered M24 query, M107 dedup_keep_best and
+    (through ``QUERIES``) the M53 curation composition; round-19 A/B
+    at sf0.1: the composition used to re-run the whole pair join + 3
+    propagation rounds (~0.8 s warm) per reference."""
     from tropology_spark.sources.tables import cache_get_or_build
 
     def build() -> DataFrame:
         from tropology_spark.operators.dedup import jaccard_pairs_materialized
+        from tropology_spark.operators.graph import min_label_rounds
 
-        d = load(spark, sf_dir, "documents")
         # Materialized once per session: three label rounds reuse it
         # (Spark does not reuse non-materialized shared subplans).
         pairs = jaccard_pairs_materialized(spark, sf_dir, block_width=40)
-        ids = d.select("doc_id")
-        es = (
-            pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-            .unionByName(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-            .unionByName(ids.select(F.col("doc_id").alias("s"), F.col("doc_id").alias("d")))
+        und = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
+            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
-        labels = ids.select("doc_id", F.col("doc_id").alias("lbl"))
-        for _ in range(3):
-            labels = (
-                es.join(labels, es.s == labels.doc_id)
-                .groupBy(F.col("d").alias("doc_id"))
-                .agg(F.min("lbl").alias("lbl"))
-            )
-        return iter_materialize(labels)
+        labels = load(spark, sf_dir, "documents").select(
+            "doc_id", F.col("doc_id").alias("lbl")
+        )
+        return min_label_rounds(und, labels, 3)
 
     return cache_get_or_build(
         _CANON_LBL_CACHE, (spark.sparkContext.applicationId, sf_dir), build
@@ -1907,36 +1900,23 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation pipelines use, where M24's min-id keep is an arbitrary
     but reproducible fallback.
 
-    Shares the session-cached pair graph with M24/M53, so the marginal
-    cost is one token count + one per-cluster arg-max window.  At
-    100 TB the policy column rides along the label propagation — same
-    shuffle count as plain canonical selection."""
+    Reads the session-cached M24 labels (canonical_labels_materialized),
+    so the marginal cost is one token count + one per-cluster arg-max
+    window.  At 100 TB the policy column rides along the label
+    propagation — same shuffle count as plain canonical selection."""
     from pyspark.sql import Window
-    from tropology_spark.operators.dedup import jaccard_pairs_materialized
 
+    labels = canonical_labels_materialized(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
-    pairs = jaccard_pairs_materialized(spark, sf_dir, block_width=40)
-    ids = d.select("doc_id")
-    es = (
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d"))
-        .unionByName(pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d")))
-        .unionByName(ids.select(F.col("doc_id").alias("s"), F.col("doc_id").alias("d")))
-    )
-    labels = ids.select("doc_id", F.col("doc_id").alias("lbl"))
-    for _ in range(3):
-        labels = (
-            es.join(labels, es.s == labels.doc_id)
-            .groupBy(F.col("d").alias("doc_id"))
-            .agg(F.min("lbl").alias("lbl"))
-        )
     ntok = d.select(
         "doc_id", F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens")
     )
+    # The (n_tokens desc, doc_id) order is total, so the first row of
+    # each cluster's window is the oracle's rn = 1 keeper.
     w = Window.partitionBy("lbl").orderBy(F.col("n_tokens").desc(), F.col("doc_id"))
-    ranked = labels.join(ntok, "doc_id").withColumn("rn", F.row_number().over(w))
-    best = ranked.filter(F.col("rn") == 1).select("lbl", F.col("doc_id").alias("keep_id"))
     return (
-        ranked.join(best, "lbl")
+        labels.join(ntok, "doc_id")
+        .withColumn("keep_id", F.first("doc_id").over(w))
         .select(
             "doc_id",
             F.col("lbl").alias("canonical_id"),
