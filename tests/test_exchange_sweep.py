@@ -28,6 +28,8 @@ Regenerate the table after INTENTIONAL plan changes::
 
 A MISSING entry is a failure by design: every new query must record
 its ceiling before the driver samples it (the M168 lockstep playbook).
+An entry for a query that is not registered fails too, so the table
+cannot keep ceilings for deleted or renamed queries.
 """
 
 from __future__ import annotations
@@ -47,6 +49,8 @@ def test_exchange_counts_within_recorded_ceilings(spark):
     )
     missing = sorted(set(QUERIES) - set(ceilings))
     assert not missing, f"queries with no recorded Exchange ceiling: {missing}"
+    orphaned = sorted(set(ceilings) - set(QUERIES))
+    assert not orphaned, f"ceilings recorded for unregistered queries: {orphaned}"
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     over: dict[str, str] = {}

@@ -1194,7 +1194,7 @@ def test_driver_window_composition(spark):
     import json
     from pathlib import Path
 
-    from tropology_spark import ORACLES, QUERIES
+    from tropology_spark import ORACLES, QUERIES, prioritize
     from tropology_spark import _R19_NEW
 
     latest: dict[str, int] = {}
@@ -1215,6 +1215,11 @@ def test_driver_window_composition(spark):
         )
     for q in window:
         assert q in ORACLES or q == "limit_unordered", q
+    # An unknown name must fail loudly and leave the order untouched.
+    before = list(QUERIES)
+    with pytest.raises(ValueError, match="no_such_query"):
+        prioritize(["no_such_query"])
+    assert list(QUERIES) == before
     # SURVEY §2.M totals line must stay in lockstep with the registry.
     import re
 

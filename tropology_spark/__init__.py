@@ -15,14 +15,13 @@ from tropology_spark.registry import QUERIES, ORACLES, register, prioritize  # n
 
 # Import all operator modules for their registration side effects.
 #
-# ORDER MATTERS for external verification: the driver checks registry
-# entries in insertion order with a bounded window (round 1 checked
-# exactly the first 50).  The novel families (dedup / text / similarity /
-# graph / scalar fns / multimodal / streaming / udfs / pipeline_ops — 53
-# queries) go first so the window covers as much of the novel surface as
-# possible; the relational core (48/48 driver-green in round 1)
-# registers last and keeps repo-side parity coverage via
-# tests/test_oracle_parity.py.
+# ORDER MATTERS: the external checker that consumes ``__spark_entry__.py``
+# hash-checks the FIRST 50 registry entries against their oracles, so
+# registration order decides which queries it samples.  The module order
+# below fixes the base order; the ``prioritize`` call at the end moves the
+# live 50-query window (the three lists it is given) to the front.
+# Changing either changes what gets checked; the window test in
+# tests/test_units.py pins it.
 from tropology_spark.operators import dedup  # noqa: F401
 from tropology_spark.operators import text  # noqa: F401
 from tropology_spark.operators import similarity  # noqa: F401
@@ -41,833 +40,7 @@ from tropology_spark.operators import windows  # noqa: F401
 from tropology_spark.operators import aggregates  # noqa: F401
 from tropology_spark.operators import relational  # noqa: F401
 
-# Round-13 driver window (the driver hash-checks the FIRST 50 entries
-# per round): the 14 activated round-13 staged operators (M283-M296,
-# never sampled) lead; every remaining slot rotates the OLDEST
-# evidence — the 5 remaining r05 rows + the 31 oldest r06 rows in
-# registry order — 14 + 5 + 31 = 50 (CLAUDE.md round-13 plan;
-# distribution re-verified against all twelve CORRECTNESS files:
-# post-r12 the evidence classes are r05:5 · r06:49 · r07:48 · r08:50 ·
-# r09:50 · r10:50 · r11:50 · r12:50 = 352).  The window test's
-# freshness bound relaxed to `latest <= 6` FIRST, in its own commit
-# (the r9-r11 precedent — r06 rows enter the rotation).
-
-#: Round-6 additions (M169+) — appended here as they are registered.
-_R6_NEW = [
-    "agg_collect_neighbors_capped",
-    "analytics_dau_streaks",
-    "analytics_basket_pairs",
-    "ts_burst_hours",
-    "text_char_trigram_profile",
-    "pipeline_bloom_dedup_audit",
-    "agg_quantile_sketch_audit",
-    "fn_url_parse",
-    "pipeline_global_deciles",
-    "sim_lsh_recall",
-    "text_vocab_jaccard_sources",
-    "graph_ra_recommend",
-    "ts_gap_report",
-    "sim_pq_recall",
-    "text_rake_keywords",
-    "sub_not_in_null",
-    "mm_chunk_manifest",
-    "analytics_event_type_overlap",
-    "agg_mergeable_stats_audit",
-    "pipeline_split_ks_audit",
-    "dedup_embedding_clusters",
-    "graph_struct_equiv",
-    "ts_coverage_union",
-    "analytics_gini_spend",
-    "analytics_order_gap_histogram",
-    "analytics_session_paths",
-    "ts_rolling_median",
-    "ts_ship_latency_quantiles",
-    "join_band_bucketed",
-    "text_ngram_novelty",
-    "mm_magic_bytes",
-    "graph_pref_attachment",
-    "sim_range_search",
-    "text_boilerplate_blocks",
-    "ts_seasonal_naive_error",
-    "graph_triangle_support",
-    "pipeline_column_profile",
-    "ts_outlier_mad",
-    "analytics_cumulative_reach",
-    "text_hashed_features",
-    "mm_chunk_dedup_stats",
-    "analytics_spend_deciles",
-    "dedup_lsh_band_stats",
-    "pipeline_split_contamination",
-]
-# _R6_NEW (44) + _R6_REWRITTEN (3) = the 47-entry round-6 head; the
-# driver filled the remaining 3 window slots from the stale queue
-# (filter_ts_range, win_lag_gap, join_range_events — all came back
-# GREEN in CORRECTNESS_r06.json, so they leave the queue below).
-
-_R6_REWRITTEN = [
-    "pipeline_epoch_shuffle",
-    "pipeline_interleave_sources",
-    "analytics_rfm_segments",
-]
-
-#: Round-7 additions (M213+) — appended here as they are registered.
-_R7_NEW = [
-    "graph_ktruss",
-    "agg_kmv_diff",
-    "pipeline_pit_leakage_audit",
-    "pipeline_stratified_reservoir",
-]
-
-#: Round-7 semantic rewrites needing fresh driver evidence: the two
-#: embedding-dedup queries re-blocked from the stored label onto the
-#: learned quantizer cell (VERDICT r6 item 3).
-_R7_REWRITTEN = [
-    "dedup_embedding_cosine",
-    "dedup_embedding_clusters",
-]
-
-#: Round-8 additions (M217+) — appended here as they are registered.
-_R8_NEW = [
-    "join_asof_tolerance",
-    "ts_sliding_distinct",
-    "dedup_survivorship_report",
-    "mm_stratified_sample",
-    "text_bpe_merge2",
-    "sim_ivf_cell_stats",
-]
-
-#: The LAST 44 r01/r02-vintage queries (the back half of the round-7
-#: refresh queue; the front 44 all came back GREEN in
-#: CORRECTNESS_r07.json).  With _R8_NEW's 6 head slots this fills the
-#: 50-slot window exactly and empties the queue.
-_R8_STALE = [
-    "join_left_outer",
-    "limit_unordered",
-    "source_range",
-    "fn_string_core",
-    "fn_explode_tokens",
-    "fn_regex",
-    "fn_math",
-    "fn_conditional",
-    "fn_array_ops",
-    "fn_hash_md5",
-    "fn_fuzzy_levenshtein",
-    "graph_build_edges",
-    "graph_degrees",
-    "graph_neighbors",
-    "graph_neighbors_in",
-    "graph_common_neighbors",
-    "graph_ego_edges",
-    "graph_twohop_count",
-    "graph_sample_nodes",
-    "graph_pagerank3",
-    "graph_kcore",
-    "graph_link_prediction",
-    "graph_network_payload",
-    "dedup_containment",
-    "sim_topk_cosine",
-    "sim_knn_join",
-    "sim_centroid_assign",
-    "sim_ivf_topk",
-    "sim_rp_lsh_topk",
-    "sim_pq_topk",
-    "text_wordcount",
-    "text_tfidf_top",
-    "text_bigrams",
-    "text_lang_stats",
-    "text_langid_nb",
-    "text_quality_score",
-    "text_token_stats",
-    "text_fingerprint",
-    "text_snippets",
-    "text_source_drift",
-    "text_rare_token_rate",
-    "text_readability",
-    "text_bpe_pairs",
-    "text_gopher_rules",
-]
-
-#: Round-9 additions (M226-M242) — the activated round-8-staged ops.
-_R9_NEW = [
-    "fn_tz_day_profile",
-    "text_bpe_vocab4",
-    "join_skyline_pareto",
-    "analytics_survival_curve",
-    "ts_double_smooth",
-    "graph_closure_rate_capped",
-    "sim_rrf_fusion",
-    "analytics_winback_counts",
-    "ts_xcorr_lagged_terms",
-    "mm_tiering_plan",
-    "ts_open_orders_sweep",
-    "pipeline_dataset_diff",
-    "join_session_overlap",
-    "analytics_window_funnel",
-    "text_lang_confusion",
-    "sim_recall_at_k_curve",
-    "analytics_value_band_migration",
-]
-
-#: Round-9 semantic retunes of the three trivially-empty queries (the
-#: round-8 empty-result audit): same names, non-vacuous results now —
-#: they need fresh driver evidence like any rewrite.
-_R9_RETUNED = [
-    "join_anti_frontier",
-    "sub_scalar_global",
-    "mm_dedup_exact",
-]
-
-#: The 30 OLDEST post-regeneration evidence rows (latest driver row is
-#: r03), in registry order; 19 r03-vintage queries remain for round 10
-#: (mm_dedup_exact's r03 row refreshes via _R9_RETUNED above).
-_R9_STALE = [
-    "sim_ann_recall",
-    "text_pii_redact",
-    "graph_connected_components",
-    "graph_component_sizes",
-    "graph_degree_histogram",
-    "fn_bitwise",
-    "fn_higher_order",
-    "fn_try_arithmetic",
-    "mm_features",
-    "mm_phash_hamming",
-    "stream_tumbling_1h",
-    "stream_sliding_1h_30m",
-    "stream_sessionize_30m",
-    "stream_interval_join",
-    "stream_latedrop_1h",
-    "udf_scalar_code_norm",
-    "udf_pandas_vectorized",
-    "udf_grouped_normalize",
-    "udf_udtf_tokenize",
-    "dedup_cluster_canonical",
-    "text_contamination",
-    "pipeline_split_assign",
-    "dedup_ngram_jaccard",
-    "text_repetition",
-    "pipeline_pack_sequences",
-    "text_token_histogram",
-    "dedup_incremental",
-    "text_inverted_index",
-    "pipeline_shard_layout",
-    "text_length_gate",
-]
-
-#: Round-10 additions (M243-M252) — the activated round-9-staged ops.
-_R10_NEW = [
-    "join_range_2d_parts",
-    "sim_ivf_batch_topk",
-    "pipeline_compaction_plan",
-    "text_pmi_collocations",
-    "pipeline_profile_drift",
-    "ts_haar_volatility",
-    "graph_rich_club_terms",
-    "analytics_chisq_priority_era",
-    "graph_sample_neighbors2",
-    "sim_matryoshka_recall",
-]
-
-#: The 19 r03-vintage rows left over from the round-9 rotation (their
-#: latest driver CORRECTNESS row is r03), in registry order.
-_R10_STALE_R03 = [
-    "text_vocab_oov",
-    "pipeline_stratified_sample",
-    "pipeline_skew_profile",
-    "pipeline_zorder_layout",
-    "pipeline_cdc_apply",
-    "pipeline_dq_report",
-    "pipeline_scd2",
-    "pipeline_weighted_sample",
-    "pipeline_minmax_scale",
-    "join_point_in_time",
-    "pipeline_negative_sample",
-    "dedup_keep_best",
-    "pipeline_token_budget",
-    "pipeline_kanon_audit",
-    "pipeline_filter_funnel",
-    "graph_closeness3",
-    "ts_drawdown",
-    "ts_winsorize",
-    "analytics_ab_lift",
-]
-
-#: The 21 OLDEST r04-vintage rows in registry order; 28 r04-vintage
-#: queries remain for the round-11 rotation (the r04 rows not listed
-#: here, starting ts_ewma / ts_anomaly_topk / ts_pattern_triples ...).
-_R10_STALE_R04 = [
-    "sim_norm_histogram",
-    "graph_twohop_capped",
-    "graph_link_prediction_capped",
-    "mm_modality_stats",
-    "pipeline_dataset_card",
-    "pipeline_chunk_documents",
-    "pipeline_mixture_weights",
-    "join_salted_hotkey",
-    "pipeline_label_balance",
-    "graph_bfs3",
-    "graph_random_walk3",
-    "graph_sssp3",
-    "graph_triangles",
-    "graph_triangles_capped",
-    "graph_butterflies",
-    "graph_clustering_pairs",
-    "graph_assortativity_terms",
-    "graph_hits_paths",
-    "mm_frame_sample",
-    "ts_resample_gapfill",
-    "ts_sessionize",
-]
-
-#: Round-11 additions (M253-M269) — the activated round-10-staged ops.
-_R11_NEW = [
-    "pipeline_quota_sample",
-    "analytics_ols_terms",
-    "pipeline_rolling_cv_folds",
-    "sim_bq_hamming_topk",
-    "dedup_threshold_curve",
-    "agg_weighted_median",
-    "text_winnowing_fingerprints",
-    "mm_cdc_chunking",
-    "dedup_cluster3",
-    "graph_path_counts3",
-    "sim_ivf_probe_curve",
-    "dedup_band_curve",
-    "mm_payload_uniformity",
-    "mm_phash_clusters",
-    "agg_hll_audit",
-    "text_simpson_concentration",
-    "dedup_method_overlap",
-]
-
-#: The 28 remaining r04-vintage rows (latest driver CORRECTNESS row is
-#: r04), in registry order — verified against all ten CORRECTNESS
-#: files before composing (the r10 confirmation precedent).  This
-#: empties the r04 class.
-_R11_STALE_R04 = [
-    "ts_ewma",
-    "ts_anomaly_topk",
-    "ts_pattern_triples",
-    "ts_runs",
-    "ts_ohlc_hourly",
-    "ts_cusum_changepoint",
-    "ts_seasonal_profile",
-    "ts_acf_terms",
-    "analytics_funnel",
-    "analytics_retention",
-    "analytics_rolling_wau",
-    "analytics_attribution",
-    "pipeline_curation_e2e",
-    "analytics_markov_transitions",
-    "analytics_new_vs_returning",
-    "win_range_1h",
-    "win_pareto_abc",
-    "agg_median_mode",
-    "agg_heavy_hitters",
-    "agg_histogram",
-    "agg_multi_distinct",
-    "agg_weighted_avg",
-    "agg_min_max_by",
-    "agg_bitmap_distinct",
-    "agg_approx_distinct",
-    "agg_unpivot_measures",
-    "join_lateral_topk",
-    "sub_exists_notexists",
-]
-
-#: The 5 OLDEST r05-vintage rows in registry order; 42 r05 queries
-#: remain for the round-12 rotation (sim_cluster_cohesion, sim_topk_l2,
-#: sim_batch_topk, dedup_lsh_recall, dedup_topk_similar head them).
-_R11_STALE_R05 = [
-    "dedup_exact",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "sim_maxsim_topk",
-]
-
-#: Round-12 additions (M270-M282) — the activated round-11-staged ops.
-_R12_NEW = [
-    "sim_sq8_recall",
-    "agg_ams_f2",
-    "text_bm25_terms",
-    "sim_graph_greedy_search",
-    "ts_motif_counts",
-    "sim_ivfpq_topk",
-    "analytics_poisson_bootstrap",
-    "pipeline_curriculum_stages",
-    "sim_filtered_topk",
-    "analytics_cuped_terms",
-    "analytics_mannwhitney_terms",
-    "ts_theilsen_micro",
-    "sim_mmr_diversify",
-]
-
-#: The 37 OLDEST r05-vintage rows in registry order; 5 r05 rows remain
-#: for the round-13 rotation (agg_kmv_intersect, join_asof_forward,
-#: sub_any_all, join_asof_nearest, agg_kmv_audit), ahead of the 49-row
-#: r06 class.
-_R12_STALE_R05 = [
-    "sim_cluster_cohesion",
-    "sim_topk_l2",
-    "sim_batch_topk",
-    "dedup_lsh_recall",
-    "dedup_topk_similar",
-    "text_token_rank_score",
-    "text_prefix_block_profile",
-    "graph_related_tropes",
-    "graph_trope_lift",
-    "fn_date_intervals",
-    "fn_hash_sha2",
-    "mm_bytes_histogram",
-    "stream_window_topk_1h",
-    "stream_dedup_counts",
-    "stream_running_counts",
-    "stream_static_join_counts",
-    "text_dup_span_frac",
-    "pipeline_token_fertility",
-    "pipeline_dup_rate_by_source",
-    "pipeline_split_leakage",
-    "pipeline_length_profile",
-    "graph_butterflies_capped",
-    "graph_clustering_pairs_capped",
-    "graph_modularity_terms",
-    "graph_label_prop3",
-    "ts_sax_symbols",
-    "ts_corr_terms",
-    "ts_peak_hours",
-    "ts_session_revenue",
-    "ts_wow_delta",
-    "analytics_cohort_revenue",
-    "analytics_stickiness_terms",
-    "analytics_time_to_convert",
-    "analytics_activity_histogram",
-    "analytics_mau_kmv_audit",
-    "topk_with_ties",
-    "agg_cms_matrix",
-]
-
-#: Round-13 additions (M283-M296) — the activated round-12-staged ops,
-#: in the staged-slate order.
-_R13_NEW = [
-    "text_heaps_curve",
-    "dedup_minhash_estimate_error",
-    "sim_hnsw_levels",
-    "ts_walsh_spectrum",
-    "mm_cdc_dedup_stats",
-    "ts_spearman_terms",
-    "analytics_did_terms",
-    "pipeline_ldp_freq_audit",
-    "join_feature_window",
-    "graph_ball2_sizes",
-    "pipeline_importance_weights",
-    "sim_pq_distortion",
-    "agg_cms_width_curve",
-    "graph_reach2_hll_audit",
-]
-
-#: The 5 remaining r05-vintage rows (the class empties this round), in
-#: registry order.
-_R13_STALE_R05 = [
-    "agg_kmv_intersect",
-    "join_asof_forward",
-    "sub_any_all",
-    "join_asof_nearest",
-    "agg_kmv_audit",
-]
-
-#: The 31 OLDEST r06-vintage rows in registry order; 18 r06 queries
-#: remain for the round-14 rotation (ts_outlier_mad,
-#: analytics_rfm_segments, analytics_dau_streaks, analytics_basket_pairs,
-#: analytics_event_type_overlap, analytics_gini_spend,
-#: analytics_order_gap_histogram, analytics_session_paths,
-#: analytics_cumulative_reach, analytics_spend_deciles, win_lag_gap,
-#: agg_collect_neighbors_capped, filter_ts_range, join_range_events,
-#: sub_not_in_null, join_band_bucketed, agg_quantile_sketch_audit,
-#: agg_mergeable_stats_audit).
-_R13_STALE_R06 = [
-    "sim_lsh_recall",
-    "sim_pq_recall",
-    "sim_range_search",
-    "dedup_lsh_band_stats",
-    "text_char_trigram_profile",
-    "text_vocab_jaccard_sources",
-    "text_rake_keywords",
-    "text_ngram_novelty",
-    "text_boilerplate_blocks",
-    "text_hashed_features",
-    "graph_ra_recommend",
-    "graph_struct_equiv",
-    "graph_pref_attachment",
-    "fn_url_parse",
-    "mm_chunk_manifest",
-    "mm_magic_bytes",
-    "mm_chunk_dedup_stats",
-    "pipeline_interleave_sources",
-    "pipeline_epoch_shuffle",
-    "pipeline_bloom_dedup_audit",
-    "pipeline_global_deciles",
-    "pipeline_split_ks_audit",
-    "pipeline_column_profile",
-    "pipeline_split_contamination",
-    "graph_triangle_support",
-    "ts_burst_hours",
-    "ts_gap_report",
-    "ts_coverage_union",
-    "ts_rolling_median",
-    "ts_ship_latency_quantiles",
-    "ts_seasonal_naive_error",
-]
-
-#: Round-14 additions (M297-M308) — the activated round-13-staged ops,
-#: in the staged-slate order.
-_R14_NEW = [
-    "agg_exp_decay_counts",
-    "text_burstiness_terms",
-    "pipeline_cascade_marginals",
-    "ts_hurst_rs_terms",
-    "analytics_srm_audit",
-    "agg_bloom_fpr_curve",
-    "text_continuation_terms",
-    "pipeline_truncation_loss_curve",
-    "sim_quantizer_drift",
-    "ts_record_hours",
-    "analytics_sequential_counts",
-    "graph_degree_gini",
-]
-
-#: The 18 remaining r06-vintage rows (the class empties this round), in
-#: registry order.
-_R14_STALE_R06 = [
-    "ts_outlier_mad",
-    "analytics_rfm_segments",
-    "analytics_dau_streaks",
-    "analytics_basket_pairs",
-    "analytics_event_type_overlap",
-    "analytics_gini_spend",
-    "analytics_order_gap_histogram",
-    "analytics_session_paths",
-    "analytics_cumulative_reach",
-    "analytics_spend_deciles",
-    "win_lag_gap",
-    "agg_collect_neighbors_capped",
-    "filter_ts_range",
-    "join_range_events",
-    "sub_not_in_null",
-    "join_band_bucketed",
-    "agg_quantile_sketch_audit",
-    "agg_mergeable_stats_audit",
-]
-
-#: The 20 OLDEST r07-vintage rows in registry order; 28 r07 queries
-#: remain for the round-15 rotation (flagship_revenue_by_region,
-#: scan_project, scan_pushdown_lookup, json_extract_props,
-#: select_compute, filter_in, filter_boolean_logic, filter_like,
-#: filter_null_semantics, join_inner, join_broadcast_star,
-#: join_full_outer, join_semi, join_self_twohop, join_asof_lastevent,
-#: join_cross_count, agg_degree, agg_pricing_summary,
-#: agg_count_distinct, agg_conditional, agg_having, sort_multi_key,
-#: topk_global, set_union_all, set_union_distinct,
-#: set_intersect_common, set_except, sub_correlated_avg).
-_R14_STALE_R07 = [
-    "dedup_embedding_cosine",
-    "dedup_embedding_clusters",
-    "fn_date",
-    "pipeline_pit_leakage_audit",
-    "pipeline_stratified_reservoir",
-    "graph_ktruss",
-    "win_rank",
-    "win_moving_avg",
-    "win_running_sum",
-    "win_distribution",
-    "win_first_last",
-    "topk_per_group",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_collect_neighbors",
-    "agg_pivot",
-    "agg_percentiles",
-    "agg_stats",
-    "agg_kmv_diff",
-]
-
-#: Round-15 additions (M309-M317) — the activated round-12-staged ops,
-#: in the staged-slate order.
-_R15_NEW = [
-    "agg_hll_m_curve",
-    "mm_cdc_size_curve",
-    "analytics_beta_posterior_terms",
-    "text_winnowing_w_curve",
-    "ts_paa_lb_audit",
-    "graph_core_profile",
-    "pipeline_contamination_ngram_curve",
-    "sim_dim_variance_profile",
-    "agg_join_size_ams",
-]
-
-#: The 28 remaining r07-vintage rows (the class empties this round), in
-#: registry order — the relational/set head of the registry.
-_R15_STALE_R07 = [
-    "flagship_revenue_by_region",
-    "scan_project",
-    "scan_pushdown_lookup",
-    "json_extract_props",
-    "select_compute",
-    "filter_in",
-    "filter_boolean_logic",
-    "filter_like",
-    "filter_null_semantics",
-    "join_inner",
-    "join_broadcast_star",
-    "join_full_outer",
-    "join_semi",
-    "join_self_twohop",
-    "join_asof_lastevent",
-    "join_cross_count",
-    "agg_degree",
-    "agg_pricing_summary",
-    "agg_count_distinct",
-    "agg_conditional",
-    "agg_having",
-    "sort_multi_key",
-    "topk_global",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect_common",
-    "set_except",
-    "sub_correlated_avg",
-]
-
-#: The 13 OLDEST r08-vintage rows in registry order; 37 r08 queries
-#: remain for the round-16 rotation (text_langid_nb,
-#: text_quality_score, text_token_stats head them in registry order).
-_R15_STALE_R08 = [
-    "sim_topk_cosine",
-    "sim_knn_join",
-    "sim_centroid_assign",
-    "sim_ivf_topk",
-    "sim_rp_lsh_topk",
-    "sim_pq_topk",
-    "sim_ivf_cell_stats",
-    "dedup_containment",
-    "dedup_survivorship_report",
-    "text_wordcount",
-    "text_tfidf_top",
-    "text_bigrams",
-    "text_lang_stats",
-]
-
-#: Round-16 additions (M318-M327) — the activated round-13-staged ops,
-#: in the staged-slate order.
-_R16_NEW = [
-    "sim_anisotropy_terms",
-    "analytics_benford_audit",
-    "pipeline_consistent_hash_moves",
-    "ts_triangle_downsample",
-    "pipeline_ldiversity_audit",
-    "graph_wedge_sample_closure",
-    "dedup_minhash_k_curve",
-    "sim_pq_k_curve",
-    "ts_local_maxima",
-    "agg_higher_moments_terms",
-]
-
-#: The 37 remaining r08-vintage rows (the class empties this round), in
-#: registry order — re-verified against all fifteen CORRECTNESS files
-#: (post-r15 classes: r08:37 · r09:50 · r10:50 · r11:50 · r12:50 ·
-#: r13:50 · r14:50 · r15:50 = 387).
-_R16_STALE_R08 = [
-    "text_langid_nb",
-    "text_quality_score",
-    "text_token_stats",
-    "text_fingerprint",
-    "text_snippets",
-    "text_rare_token_rate",
-    "text_readability",
-    "text_source_drift",
-    "text_bpe_pairs",
-    "text_gopher_rules",
-    "text_bpe_merge2",
-    "graph_build_edges",
-    "graph_degrees",
-    "graph_neighbors",
-    "graph_common_neighbors",
-    "graph_ego_edges",
-    "graph_twohop_count",
-    "graph_sample_nodes",
-    "graph_pagerank3",
-    "graph_network_payload",
-    "graph_neighbors_in",
-    "graph_link_prediction",
-    "graph_kcore",
-    "fn_string_core",
-    "fn_explode_tokens",
-    "fn_regex",
-    "fn_math",
-    "fn_conditional",
-    "fn_array_ops",
-    "fn_hash_md5",
-    "fn_fuzzy_levenshtein",
-    "mm_stratified_sample",
-    "ts_sliding_distinct",
-    "join_left_outer",
-    "limit_unordered",
-    "source_range",
-    "join_asof_tolerance",
-]
-
-#: The 3 OLDEST r09-vintage rows in registry order; 47 r09 queries
-#: remain for the round-17 rotation (no further bound relaxation
-#: needed — `latest <= 9` already admits them, the r12 precedent).
-_R16_STALE_R09 = [
-    "sim_ann_recall",
-    "sim_rrf_fusion",
-    "sim_recall_at_k_curve",
-]
-
-#: Round-17 additions (M328-M337) — the activated round-13-staged ops,
-#: in the staged-slate order.
-_R17_NEW = [
-    "agg_distinct_sample_curve",
-    "text_zipf_rank_curve",
-    "pipeline_shard_balance",
-    "pipeline_reservoir_merge_audit",
-    "ts_dominant_period",
-    "agg_misra_gries_audit",
-    "join_bloom_prefilter_audit",
-    "sim_mutual_knn",
-    "sim_rocchio_feedback",
-    "analytics_lehr_sample_size",
-]
-
-#: The 40 OLDEST r09-vintage rows in registry order — re-verified
-#: against all sixteen CORRECTNESS files (post-r16 classes: r09:47 ·
-#: r10:50 · r11:50 · r12:50 · r13:50 · r14:50 · r15:50 · r16:50 =
-#: 397).  No bound relaxation was needed (`latest <= 9` already admits
-#: the r09 rotation class — the r12/r16 precedent).  The 7 r09 rows
-#: remaining for round 18: analytics_winback_counts,
-#: analytics_window_funnel, analytics_value_band_migration,
-#: join_anti_frontier, sub_scalar_global, join_skyline_pareto,
-#: join_session_overlap.
-_R17_STALE_R09 = [
-    "text_pii_redact",
-    "text_bpe_vocab4",
-    "text_lang_confusion",
-    "graph_connected_components",
-    "graph_component_sizes",
-    "graph_degree_histogram",
-    "fn_bitwise",
-    "fn_higher_order",
-    "fn_try_arithmetic",
-    "fn_tz_day_profile",
-    "mm_features",
-    "mm_dedup_exact",
-    "mm_phash_hamming",
-    "mm_tiering_plan",
-    "stream_tumbling_1h",
-    "stream_sliding_1h_30m",
-    "stream_sessionize_30m",
-    "stream_interval_join",
-    "stream_latedrop_1h",
-    "udf_scalar_code_norm",
-    "udf_pandas_vectorized",
-    "udf_grouped_normalize",
-    "udf_udtf_tokenize",
-    "dedup_cluster_canonical",
-    "text_contamination",
-    "pipeline_split_assign",
-    "dedup_ngram_jaccard",
-    "text_repetition",
-    "pipeline_pack_sequences",
-    "text_token_histogram",
-    "dedup_incremental",
-    "text_inverted_index",
-    "pipeline_shard_layout",
-    "text_length_gate",
-    "pipeline_dataset_diff",
-    "graph_closure_rate_capped",
-    "ts_double_smooth",
-    "ts_xcorr_lagged_terms",
-    "ts_open_orders_sweep",
-    "analytics_survival_curve",
-]
-
-#: Round-18 additions (M338-M347) — the activated round-13-staged ops,
-#: in the staged-slate order.
-_R18_NEW = [
-    "ts_leadlag_matrix",
-    "analytics_permutation_rank",
-    "text_source_tv_matrix",
-    "ts_seasonal_anova_terms",
-    "graph_degree_quantiles",
-    "analytics_qte_deciles",
-    "pipeline_kanon_curve",
-    "join_session_overlap_duration",
-    "sim_label_scatter_terms",
-    "analytics_ta_depth_curve",
-]
-
-#: The 7 remaining r09-vintage rows (the class empties this round) —
-#: re-verified against all seventeen CORRECTNESS files (post-r17
-#: classes: r09:7 · r10:50 · r11:50 · r12:50 · r13:50 · r14:50 ·
-#: r15:50 · r16:50 · r17:50 = 407).
-_R18_STALE_R09 = [
-    "analytics_winback_counts",
-    "analytics_window_funnel",
-    "analytics_value_band_migration",
-    "join_anti_frontier",
-    "sub_scalar_global",
-    "join_skyline_pareto",
-    "join_session_overlap",
-]
-
-#: The 33 OLDEST r10-vintage rows in registry order (the bound relaxed
-#: to `latest <= 10` first, in its own commit — r10 rows enter the
-#: rotation).  The 17 r10 rows remaining for round 19:
-#: graph_closeness3, graph_triangles, graph_triangles_capped,
-#: graph_butterflies, graph_clustering_pairs, graph_assortativity_terms,
-#: graph_hits_paths, graph_rich_club_terms, mm_frame_sample,
-#: ts_resample_gapfill, ts_sessionize, ts_drawdown, ts_winsorize,
-#: ts_haar_volatility, analytics_ab_lift, analytics_chisq_priority_era,
-#: join_range_2d_parts.
-_R18_STALE_R10 = [
-    "sim_norm_histogram",
-    "sim_ivf_batch_topk",
-    "sim_matryoshka_recall",
-    "text_pmi_collocations",
-    "graph_twohop_capped",
-    "graph_link_prediction_capped",
-    "graph_sample_neighbors2",
-    "mm_modality_stats",
-    "text_vocab_oov",
-    "pipeline_stratified_sample",
-    "pipeline_skew_profile",
-    "pipeline_zorder_layout",
-    "pipeline_cdc_apply",
-    "pipeline_dq_report",
-    "pipeline_scd2",
-    "pipeline_weighted_sample",
-    "pipeline_minmax_scale",
-    "join_point_in_time",
-    "pipeline_negative_sample",
-    "pipeline_dataset_card",
-    "pipeline_chunk_documents",
-    "pipeline_mixture_weights",
-    "join_salted_hotkey",
-    "pipeline_label_balance",
-    "dedup_keep_best",
-    "pipeline_token_budget",
-    "pipeline_kanon_audit",
-    "pipeline_filter_funnel",
-    "pipeline_compaction_plan",
-    "pipeline_profile_drift",
-    "graph_bfs3",
-    "graph_random_walk3",
-    "graph_sssp3",
-]
-
-#: Round-19 additions (M348-M357) — the activated round-13-staged ops,
-#: in the staged-slate order.
+#: Round-19 additions (M348-M357), in the staged-slate order.
 _R19_NEW = [
     "ts_discord_days",
     "ts_linear_interpolate",
@@ -881,10 +54,7 @@ _R19_NEW = [
     "analytics_gini_by_month",
 ]
 
-#: The 17 remaining r10-vintage rows (the class empties this round) —
-#: re-verified against all eighteen CORRECTNESS files (post-r18
-#: classes: r10:17 · r11:50 · r12:50 · r13:50 · r14:50 · r15:50 ·
-#: r16:50 · r17:50 · r18:50 = 417).
+#: The 17 r10-vintage rows left in the round-19 rotation.
 _R19_STALE_R10 = [
     "graph_closeness3",
     "graph_triangles",
@@ -905,18 +75,7 @@ _R19_STALE_R10 = [
     "join_range_2d_parts",
 ]
 
-#: The 23 OLDEST r11-vintage rows in registry order (the bound relaxed
-#: to `latest <= 11` first, in its own commit — r11 rows enter the
-#: rotation).  The 27 r11 rows remaining for round 20:
-#: ts_ohlc_hourly, ts_cusum_changepoint, ts_seasonal_profile,
-#: ts_acf_terms, analytics_funnel, analytics_retention,
-#: analytics_rolling_wau, analytics_attribution, pipeline_curation_e2e,
-#: analytics_markov_transitions, analytics_new_vs_returning,
-#: analytics_ols_terms, win_range_1h, win_pareto_abc, agg_median_mode,
-#: agg_heavy_hitters, agg_histogram, agg_multi_distinct,
-#: agg_weighted_avg, agg_min_max_by, agg_bitmap_distinct,
-#: agg_approx_distinct, agg_unpivot_measures, join_lateral_topk,
-#: sub_exists_notexists, agg_weighted_median, agg_hll_audit.
+#: The 23 oldest r11-vintage rows in registry order.
 _R19_STALE_R11 = [
     "dedup_exact",
     "dedup_jaccard_pairs",

